@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
 /** Overhead-attribution main (guide §1: measure first). For each named
   * query, runs the same timed action the bench uses and reports WHERE
   * the wall-clock goes: job count, stage count, task count, summed
@@ -12,26 +8,21 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * structure — jobs × stages × task dispatch — not data volume; this
   * tool names the structure so the optimization (fewer passes, fewer
   * exchanges, fewer eager jobs) can be chosen per query instead of
-  * guessed. Usage: runMain graft.Profile [sfDir] [q...] (default: all).
+  * guessed. On a Scaling corpus decade (SPARK_GRAFT_SCALING_MODE=generate
+  * writes them) it attributes a line's growth. Usage:
+  * runMain graft.Profile [sfDir] [q...] (default: all). Exits non-zero
+  * if a prepare failed.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val wanted = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // see Bench: AQE-sized partitioning under cached relations
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    val wanted = Some(args.drop(1).toSet).filter(_.nonEmpty)
+    val builder = Harness.builder()
     // A/B lever: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies arbitrary
     // session confs so config hypotheses can be measured side by side
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
       // tolerate malformed entries (trailing ';', missing '=') instead
-      // of crashing the profiler with an opaque MatchError (ADVICE r15)
+      // of crashing the profiler with an opaque MatchError
       kv.split("=", 2) match {
         case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v.trim)
         case _ if kv.trim.isEmpty => ()
@@ -39,95 +30,39 @@ object Profile {
           s"Profile: ignoring malformed SPARK_GRAFT_EXTRA_CONF entry '$kv'")
       }
     })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val taskMs = new AtomicLong(0L)
-    // per-stage attribution (SPARK_GRAFT_PROFILE_STAGES=1): stageId →
-    // (tasks, summed executorRunTime ms); stage names carry the callsite
-    val perStage = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()
-    val stageNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val spark = Harness.start(builder)
+    // per-stage attribution (SPARK_GRAFT_PROFILE_STAGES=1): the costliest
+    // stages of each line, named by call site
     val stageDetail = sys.env.get("SPARK_GRAFT_PROFILE_STAGES").contains("1")
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        if (stageDetail)
-          stageNames.put(sc.stageInfo.stageId,
-            sc.stageInfo.name.takeWhile(_ != '\n'))
-      }
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        if (te.taskMetrics != null) {
-          taskMs.addAndGet(te.taskMetrics.executorRunTime)
-          if (stageDetail)
-            perStage.merge(te.stageId, (1, te.taskMetrics.executorRunTime),
-              (a, b) => (a._1 + b._1, a._2 + b._2))
-        }
-      }
-    })
-    def gcNow(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-        .map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (n, _) => wanted.isEmpty || wanted.contains(n) }
-      .sortBy(_._1.stripPrefix("q").takeWhile(_.isDigit).toInt)
+    val ordered = Harness.select(SparkEntry.queries.toSeq, wanted)
 
     // same warmup discipline as Bench so JIT/codegen is not charged
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    if (warmDir.nonEmpty) {
-      ordered.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      }
-      graft.ops.Materialize.release(spark)
-    }
-    // same untimed prepares as Bench for the artifact-served lines
-    try graft.ops.Scale.prepareBuckets(spark, sfDir) catch { case _: Throwable => () }
-    try graft.ops.Similarity.preparedIvfIndex(spark, sfDir) catch { case _: Throwable => () }
-    try graft.sources.JsonlCorpus.preparedJsonl(spark, sfDir) catch { case _: Throwable => () }
-    try graft.streaming.DedupStream.prepareFrozen(spark, sfDir) catch { case _: Throwable => () }
-    try graft.ops.Dedup.preparedDedupIndex(spark, sfDir, graft.ops.Dedup.OracleHashBits) catch { case _: Throwable => () }
-    try graft.ops.TextAnalytics.preparedPostingsIndex(spark, sfDir) catch { case _: Throwable => () }
-    try graft.ops.Dedup.preparedDedupGraph(spark, sfDir, graft.ops.Dedup.OracleHashBits) catch { case _: Throwable => () }
-    try graft.ops.Hybrid.preparedEvalScores(spark, sfDir, graft.ops.Dedup.OracleHashBits) catch { case _: Throwable => () }
-    try graft.ops.Dedup.preparedWinnowIndex(spark, sfDir, graft.ops.Dedup.OracleHashBits) catch { case _: Throwable => () }
-    try graft.ops.Dedup.preparedOverlapPostings(spark, sfDir, graft.ops.Dedup.OracleHashBits) catch { case _: Throwable => () }
-    try graft.ops.Dedup.prepareGraphSnapshots(spark, sfDir, 2 * ordered.size,
-      graft.ops.Dedup.OracleHashBits) catch { case _: Throwable => () }
+    val warmupFailed =
+      if (warmDir.nonEmpty) Harness.warm(spark, warmDir, ordered, releaseEach = false)
+      else Nil
+    // each line runs twice at sfDir: one untimed pass, one timed
+    val prepared = Harness.prepare(spark, sfDir, ordered.flatMap { case (n, _) => Seq(n, n) })
 
     println(f"${"query"}%-28s ${"sec"}%7s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"taskSec"}%8s ${"gcMs"}%5s")
-    ordered.foreach { case (name, fn) =>
+    val lineWarmFailed = ordered.flatMap { case (name, fn) =>
       // one untimed pass so the measured pass is steady-state
-      try { fn(spark, sfDir).count(); () } catch { case _: Throwable => () }
-      graft.ops.Materialize.release(spark)
-      jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
-      perStage.clear(); stageNames.clear()
-      val gc0 = gcNow()
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
-               catch { case e: Throwable => System.err.println(s"$name: $e"); false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      graft.ops.Materialize.release(spark)
-      // listener events drain asynchronously; give them a beat
-      Thread.sleep(150)
-      val gcd = gcNow() - gc0
-      println(f"$name%-28s ${if (ok) sec else -sec}%7.3f ${jobs.get()}%5d ${stages.get()}%7d ${tasks.get()}%6d ${taskMs.get() / 1000.0}%8.2f $gcd%5d")
-      if (stageDetail) {
-        import scala.jdk.CollectionConverters._
-        perStage.asScala.toSeq.sortBy(-_._2._2).take(12).foreach {
-          case (sid, (n, ms)) =>
-            val nm = Option(stageNames.get(sid)).getOrElse("?")
-            println(f"    stage $sid%5d $n%4d tasks ${ms / 1000.0}%8.2f s  $nm")
-        }
+      val failed = Harness.warm(spark, sfDir, Seq(name -> fn), releaseEach = true)
+      val t = Harness.timed(spark, name)(fn(spark, sfDir).count())
+      println(f"$name%-28s ${if (t.ok) t.sec else -t.sec}%7.3f ${t.jobs}%5d ${t.stages}%7d ${t.tasks}%6d ${t.taskSec}%8.2f ${t.gcMs}%5d")
+      if (stageDetail) Harness.meter(spark).topStages(12).foreach { case (sid, n, ms, nm) =>
+        println(f"    stage $sid%5d $n%4d tasks ${ms / 1000.0}%8.2f s  $nm")
       }
+      failed
     }
     spark.stop()
+    val warmFailed = warmupFailed ++ lineWarmFailed
+    if (warmFailed.nonEmpty)
+      System.err.println(s"Profile: ${warmFailed.size} warm-up failures: ${warmFailed.mkString(", ")}")
+    val prepareFailed = prepared.collect { case Harness.Outcome(n, Some(_)) => n }
+    if (prepareFailed.nonEmpty) {
+      System.err.println(s"Profile FAILED prepares: ${prepareFailed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -45,7 +45,7 @@ object Scaling {
   val ScalingBits: Int = sys.env.get("SPARK_GRAFT_SCALING_BITS")
     .map(_.toInt).getOrElse(graft.ops.Dedup.DefaultHashBits)
 
-  private val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+  private val queries: Seq[(String, Harness.Line)] = Seq(
     "q14_minhash_lsh" -> ((s, d) => graft.ops.Dedup.minhashLshPairs(s, d, ScalingBits)),
     "q15_jaccard_pairs" -> ((s, d) => graft.ops.Dedup.jaccardPairs(s, d, ScalingBits)),
     // round-15 served forms (VERDICT r14 item 1): pass 1 of min-of-2
@@ -275,31 +275,20 @@ object Scaling {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outMd = if (args.length > 1) args(1) else "SCALING.md"
-    // dev-loop knobs (same contract as Bench's SPARK_GRAFT_ONLY): run a
-    // query subset and/or different amplification decades — used for
-    // the winnow family's fourth-decade measurement without re-timing
-    // the whole family
+    // dev-loop knobs: run a query subset (SPARK_GRAFT_ONLY, Bench's
+    // contract) and/or different amplification decades — used for the
+    // winnow family's fourth-decade measurement without re-timing the
+    // whole family
     val factors = sys.env.get("SPARK_GRAFT_SCALING_FACTORS")
       .map(_.split(",").toSeq.map(_.trim.toInt)).getOrElse(Factors)
-    val only = sys.env.get("SPARK_GRAFT_SCALING_ONLY").map(_.split(",").toSet)
-    val queriesRun = queries.filter { case (n, _) => only.forall(_.contains(n)) }
-    val spark = SparkSession.builder()
-      .master("local[32]")
+    val queriesRun = Harness.select(queries, Harness.only)
+    val spark = Harness.start(Harness.builder()
       // a real cluster scales partition count with the corpus; the
-      // fixed-32 default here means upper decades run with growing
-      // per-task working sets — overridable to separate that
+      // fixed CPU-count default here means upper decades run with
+      // growing per-task working sets — overridable to separate that
       // measurement-regime effect from true plan growth
       .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: codegen-class cache sized for a many-query sweep
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // see Bench: AQE-sized partitioning under cached relations —
-      // size-adaptive at every decade, same switch the bench runs with
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", Harness.cpus)))
 
     // warm-cell discipline (round 15, VERDICT r14 item 3): the first
     // timed cells after an untimed multi-GB tmpfs corpus write read
@@ -359,28 +348,22 @@ object Scaling {
       System.gc()
     }
 
-    def timeOne(fn: (SparkSession, String) => DataFrame, dir: String): (Double, Long) = {
+    def timeOne(name: String, fn: Harness.Line, dir: String): (Double, Long) = {
       // min-of-2 with cache release between passes: Bench's discipline
-      val runs = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val rows = fn(spark, dir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        graft.ops.Materialize.release(spark)
-        (sec, rows)
-      }
-      (runs.map(_._1).min, runs.head._2)
+      val runs = Seq.fill(2)(Harness.timed(spark, name)(fn(spark, dir).count()))
+      require(runs.forall(_.ok), s"scaling: $name failed at $dir")
+      (runs.map(_.sec).min, runs.head.rows)
     }
 
     // JIT warmup on the smallest decade so factor-1 timings aren't
     // charged for codegen compilation
-    queriesRun.foreach { case (_, fn) =>
-      try { fn(spark, dirs.head._2).count(); () } catch { case _: Throwable => () }
-      graft.ops.Materialize.release(spark)
-    }
+    val warmupFailed = Harness.warm(spark, dirs.head._2, queriesRun, releaseEach = true)
+    if (warmupFailed.nonEmpty)
+      System.err.println(s"scaling: ${warmupFailed.size} warm-up failures: ${warmupFailed.mkString(", ")}")
 
     val rows = queriesRun.map { case (name, fn) =>
       val times = dirs.map { case (f, dir, n) =>
-        val (sec, outRows) = timeOne(fn, dir)
+        val (sec, outRows) = timeOne(name, fn, dir)
         println(f"  $name f=$f%-3d n=$n%-7d ${sec}%7.3f s  out=$outRows")
         (f, n, sec, outRows)
       }
@@ -400,7 +383,7 @@ object Scaling {
     val sb = new StringBuilder
     sb ++= "# SCALING — measured growth exponents for the dedup family\n\n"
     sb ++= s"Generated by `sbt \"runMain graft.Scaling\"` on ${java.time.LocalDate.now} " +
-      s"(local[32], min-of-2 per cell, shared caches released between passes).\n\n"
+      s"(local[${Harness.cpus}], min-of-2 per cell, shared caches released between passes).\n\n"
     sb ++= s"Corpus decades are deterministic amplifications of `$srcDir`'s `documents` " +
       s"($baseN docs): replica r remaps `doc_id` and suffixes every word with `_r`, " +
       "so duplicate-family structure is constant and family count scales with the " +
@@ -439,7 +422,9 @@ object Scaling {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
         .foreach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"scaling: could not remove scratch corpora under $root: $e")
+    }
     spark.stop()
     if (fail) {
       System.err.println(s"scaling: top-decade exponent above $MaxExponent")

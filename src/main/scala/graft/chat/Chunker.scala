@@ -522,11 +522,4 @@ object Chunker {
         .map { case (r, _, c, lang, e) => CodeChunk(r, c, lang, e) }
     }
   }
-
-  /** P5: observable per-language stats of a chunk set. */
-  def chunkStats(chunks: DataFrame): DataFrame =
-    chunks.groupBy(coalesce(col("language"), lit("unknown")).as("language"))
-      .agg(count(lit(1)).as("n_chunks"),
-        countDistinct(col("file_path")).as("n_files"))
-      .orderBy("language")
 }

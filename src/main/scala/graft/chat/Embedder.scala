@@ -58,8 +58,6 @@ class HashingEmbedder(val dim: Int = 256) extends Embedder {
       if (norm == 0) c.map(_.toFloat)
       else c.map(x => (x / norm).toFloat)
     }
-
-  val BatchSize = 32 // main.rs:288 app_batch_size
 }
 
 object Embedders {

@@ -22,7 +22,6 @@ object Consts {
     * ops per shingle instead of 16 md5s. All integer arithmetic, so
     * Spark and DuckDB agree bit-for-bit.
     * 16 = 4 bands x 4 rows (LSH banding; ~0.5 Jaccard threshold knee). */
-  val MinhashSeeds: Range = 0 until 16
   val LshBands = 4
   val LshRowsPerBand = 4
   val MinhashPrime = 2147483647L // 2^31 - 1

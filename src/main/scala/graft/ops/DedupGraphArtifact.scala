@@ -448,8 +448,8 @@ trait DedupGraphArtifact { this: Dedup.type =>
     * half — the q81/q105 discipline applied to the copy itself): the
     * filesystem copy in [[graphAppendReport]]/q166 is harness
     * isolation, not operator work — a real deployment appends each
-    * wave ONCE, in place — so Bench pools `n` fresh copies here before
-    * the timed passes and each invocation dequeues one; the timed line
+    * wave ONCE, in place — so the harness pools `n` fresh copies here
+    * before the timed passes and each invocation dequeues one; the timed line
     * then measures append + report only. Invocations beyond the pool
     * fall back to copying inline (Verify and specs are untimed), so
     * the isolation invariant — every invocation appends into a dir no
@@ -580,7 +580,7 @@ trait DedupGraphArtifact { this: Dedup.type =>
     * wave's ids against the artifact's labels. The frozen graph and
     * admission index are build-half artifacts (untimed, JVM-cached),
     * and the per-invocation isolation snapshot comes from the
-    * [[prepareGraphSnapshots]] pool when Bench pre-filled it — the
+    * [[prepareGraphSnapshots]] pool when the harness pre-filled it — the
     * timed line is append + report, not the harness copy. */
   def graphAppendReport(spark: SparkSession, sfDir: String,
                         bits: Int = DefaultHashBits): DataFrame = {

@@ -24,7 +24,6 @@ import graft.functions.ExactSums._
   */
 object Events {
 
-  private val HourUs = 3600L * 1000000L
   private val SlideUs = 900L * 1000000L
   private val SessionGapUs = 30L * 60L * 1000000L
 
@@ -502,10 +501,11 @@ object Events {
     // round 16 (guide §4): pair emission as pure-codegen generators —
     // sort_array + posexplode + explode(slice(s, pos+2, size)) — in
     // place of the typed flatMap, which paid a SerializeFromObject
-    // boundary and a Tuple2 allocation per pair. Q170Probe at the f=64
-    // amplified decade: 13.56 → 12.45 s (min-of-2) on the mutual-edge
-    // half, with tighter pass-to-pass spread (12.45/12.49 vs
-    // 13.56/15.53); identical 224,448-row edge set. The slice per
+    // boundary and a Tuple2 allocation per pair. Measured at the f=64
+    // amplified decade (graft.Profile on a Scaling corpus re-measures
+    // the line): 13.56 → 12.45 s (min-of-2) on the mutual-edge half,
+    // with tighter pass-to-pass spread (12.45/12.49 vs 13.56/15.53);
+    // identical 224,448-row edge set. The slice per
     // (cell, i) copies only the suffix array — O(pairs) elements
     // total, the same volume the flatMap emitted, with the cell cap
     // bounding every per-row array at C(64,2).
@@ -574,7 +574,7 @@ object Events {
     // which withoutEagerness cannot suppress — fall back to the lazy
     // un-checkpointed lineage there (ADVICE r15)
     val und =
-      if (!Materialize.eagerEnabled) coVisitMutualEdges(spark, sfDir)
+      if (!Materialize.eagerEnabled(spark)) coVisitMutualEdges(spark, sfDir)
       else Materialize.tracked(spark,
         coVisitMutualEdges(spark, sfDir).localCheckpoint(true))
     // degree via ONE window over the bidirectional frame (no deg join):
@@ -585,8 +585,9 @@ object Events {
     // f=64 amplified decade 13.8 → 31.6 s — the orientation joins'
     // strategy degrades once und outgrows broadcast range and the
     // oriented subtree, now rooted in joins instead of a reusable
-    // exchange, re-executes per triangle alias. Q170Probe carries the
-    // A/B; the window form stays.)
+    // exchange, re-executes per triangle alias. To re-measure, run
+    // graft.Profile on a Scaling corpus decade (f64) with q170; the
+    // window form stays.)
     val bi = und.select(col("a").as("n"), col("b").as("m"))
       .union(und.select(col("b").as("n"), col("a").as("m")))
       .withColumn("dn", count(lit(1)).over(Window.partitionBy("n")))

@@ -114,7 +114,7 @@ object DedupStream {
 
   /** Build (or fetch) the frozen corpus reference for `sfDir` — the
     * JVM-lifetime checkpoint cache lives in `Dedup.preparedFrozenCorpus`
-    * (shared with batch q99). Bench calls this in its untimed prepare
+    * (shared with batch q99). The harness calls this in its untimed prepare
     * block; admissionStream calls it per run and hits the cache from
     * the second call on. */
   def prepareFrozen(spark: org.apache.spark.sql.SparkSession, sfDir: String,

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -8,8 +9,8 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Column <-> Expression bridge. Spark 4's Column wraps a ColumnNode
   * and the conversion helpers are private[sql]; this shim (in an
   * org.apache.spark.sql subpackage, the standard extension-point
-  * technique) exposes exactly the conversions our custom expressions
-  * and cache management need. */
+  * technique) exposes exactly the conversions our custom expressions,
+  * cache management and the harness timer need. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -25,4 +26,9 @@ object Bridge {
       case lr: LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
+
+  /** Block until every listener has seen every posted event, so
+    * listener counters read after a job describe all of it (the bus
+    * delivers asynchronously). */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
